@@ -25,6 +25,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..concurrency import run_concurrent
+
 
 def cms_build(
     df: DataFrame,
@@ -608,8 +610,8 @@ def ams_f2(
     # the sketch scan and the exact audit rollup share no inputs'
     # results — submit both jobs at once so the audit back-fills the
     # cluster during the sketch scan's tail (guide §2.6 overlap)
-    sa, exact = _run_concurrent(
-        lambda: _sign_sums(df, key_expr, reps), _exact
+    sa, exact = run_concurrent(
+        df.sparkSession, lambda: _sign_sums(df, key_expr, reps), _exact
     )
     gs = [
         sum(sa[j] ** 2 for j in range(g * per, (g + 1) * per))
@@ -620,28 +622,6 @@ def ams_f2(
         [(g, gs[g], est, exact) for g in range(groups)],
         "g int, sum_e long, est_f2 double, exact_f2 long",
     ).orderBy("g")
-
-
-def _run_concurrent(*thunks):
-    """Run independent Spark actions from driver threads so their jobs
-    overlap (FIFO scheduling back-fills executor slots — guide §2.6).
-    Returns their results in submission order; used only for
-    bounded-collect actions. Under Spark Connect there is no
-    SparkContext for ``inheritable_thread_target``'s classic form to
-    propagate, so fall back to sequential execution — the overlap is a
-    latency optimization, never a semantic one."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        from pyspark import inheritable_thread_target
-
-        wrapped = [inheritable_thread_target(t) for t in thunks]
-    except Exception:  # Spark Connect: no active classic SparkContext
-        return [t() for t in thunks]
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(w) for w in wrapped]
-        return [f.result() for f in futures]
 
 
 def _ams_validate(reps: int, groups: int) -> None:
@@ -782,10 +762,10 @@ def ams_join_size(
         lambda: _sign_sums(df_b, key_b, reps),
     ]
     if audit:
-        results = _run_concurrent(*thunks, _exact)
+        results = run_concurrent(df_a.sparkSession, *thunks, _exact)
         sa, sb, exact = results[0], results[1], results[2]
     else:
-        sa, sb = _run_concurrent(*thunks)
+        sa, sb = run_concurrent(df_a.sparkSession, *thunks)
     gs = [
         sum(sa[j] * sb[j] for j in range(g * per, (g + 1) * per))
         for g in range(groups)

@@ -49,19 +49,19 @@ def get_spark(
     # the default vs 8.2 s at 512m while its isolated time never
     # moved — the full-suite A/B is in OPTIMIZATION_r15.md). Applied
     # to driver AND executors (local mode runs codegen in the driver
-    # JVM; a cluster compiles the same classes in every executor).
-    # Only effective when this process launches the JVM — a
+    # JVM; a cluster compiles the same classes in every executor),
+    # appended to any extraJavaOptions the caller passes in extra_conf
+    # rather than replacing them. Only effective when this process launches the JVM — a
     # pre-existing gateway (driver harness, test session reuse) keeps
     # its own value, which is exactly the non-invasive behavior the
     # driver contract needs.
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
-    jit_opts = f"-XX:ReservedCodeCacheSize={code_cache}"
+    conf = with_code_cache(
+        extra_conf, os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.driver.extraJavaOptions", jit_opts)
-        .config("spark.executor.extraJavaOptions", jit_opts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -89,12 +89,27 @@ def get_spark(
     except ImportError:
         pass
 
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def with_code_cache(
+    extra_conf: dict[str, str] | None, code_cache: str
+) -> dict[str, str]:
+    """``extra_conf`` with ``-XX:ReservedCodeCacheSize`` appended to the
+    caller's driver and executor ``extraJavaOptions`` (set alone when
+    the caller gave none). A caller whose options already size the code
+    cache keeps its own value."""
+    conf = dict(extra_conf or {})
+    for key in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+        opts = conf.get(key, "")
+        if "-XX:ReservedCodeCacheSize=" not in opts:
+            conf[key] = f"{opts} -XX:ReservedCodeCacheSize={code_cache}".strip()
+    return conf
 
 
 def has_delta(spark: SparkSession) -> bool:

@@ -12,6 +12,13 @@ with two deliberate upgrades:
   merge condition would be literal false → every row inserts, i.e.
   append (overwrite on initial load).
 
+Concurrency: ``framework.run_source`` calls :func:`write_raw` and
+:func:`write_hub` (and the quarantine append, itself a
+:func:`write_raw`) from concurrent driver threads over one cached
+batch. That is safe because each call owns a distinct directory —
+``framework.zone_paths`` refuses a source whose zones share one — and
+the HUB merge's staging swap keeps its single-writer contract per path.
+
 Scale notes: the HUB merge shuffles both sides on the key columns;
 at 100 TB you bucket the HUB table by the keys (or rely on Delta's
 dynamic file pruning) so the merge only rewrites touched files.
@@ -96,9 +103,10 @@ def _write_hub_parquet_merge(
         return
 
     existing = spark.read.parquet(path)
-    kept = existing.join(
-        df.select(*keys).distinct(), on=keys, how="left_anti"
-    )
+    # no distinct on the incoming keys: a left_anti join already ignores
+    # duplicates on its right side, and a distinct would only add an
+    # aggregation and a shuffle to the merge's critical path
+    kept = existing.join(df.select(*keys), on=keys, how="left_anti")
     merged = kept.unionByName(df, allowMissingColumns=True)
 
     staging = staging_dir(target)

@@ -207,7 +207,8 @@ def test_quarantine_malformed_json_rows(spark, tmp_path):
     cfg = Config.from_defaults(
         {"raw_base": str(tmp_path / "raw"), "hub_base": str(tmp_path / "hub")}
     )
-    run_source(spark, source, cfg, ingest_date="2026-01-01")
+    m = run_source(spark, source, cfg, ingest_date="2026-01-01")
+    assert m["rows_quarantined"] == 1
 
     hub = spark.read.parquet(str(tmp_path / "hub" / "d" / "e"))
     assert sorted(r.pk for r in hub.collect()) == [1, 2]
@@ -303,7 +304,7 @@ def test_run_source_counts_null_keys(spark, tmp_path):
         checkpoint_base=str(tmp_path / "cp"),
     )
     m = run_source(spark, src, cfg, ingest_date="2026-08-13")
-    assert m == {"rows_ingested": 4, "null_key_rows": 2}
+    assert m == {"rows_ingested": 4, "null_key_rows": 2, "rows_quarantined": 0}
 
 
 def test_snapshot_reader_registered(spark, tmp_path):
@@ -345,3 +346,143 @@ def test_avro_reader_roundtrip(spark, tmp_path):
     assert sorted((r.id, r.name, r.score) for r in got.collect()) == [
         (i, str(i), i * 2.5) for i in range(10)
     ]
+
+
+# --- overlapped zone writes -------------------------------------------
+
+CSV_SCHEMA = "k INT, v STRING, _corrupt_record STRING"
+
+
+@pytest.fixture()
+def split_source(tmp_path):
+    """A CSV source of four files (one input split each). Every file
+    holds three clean rows, one of them with a NULL key, and one
+    malformed line captured in ``_corrupt_record``."""
+    from metadata_ingestion_poc_spark.config import Config
+    from metadata_ingestion_poc_spark.metadata import Source
+
+    landing = tmp_path / "in"
+    landing.mkdir()
+    for i in range(4):
+        (landing / f"part{i}.csv").write_text(
+            f"{10 * i + 1},a{i}\n,b{i}\n{10 * i + 2},c{i}\n"
+            f"not-a-number,d{i},extra\n"
+        )
+    source = Source(
+        id="split_csv", type="csv", domain="d", entity="split",
+        options={
+            "path": str(landing),
+            "schema": CSV_SCHEMA,
+            "columnNameOfCorruptRecord": "_corrupt_record",
+            "mode": "PERMISSIVE",
+        },
+        hub_primary_keys=["k"],
+    )
+    cfg = Config.from_defaults(
+        {"raw_base": str(tmp_path / "raw"), "hub_base": str(tmp_path / "hub")}
+    )
+    return source, cfg
+
+
+def test_overlapped_counters_exact_every_run(spark, split_source):
+    """The counters ride the RAW branch above the cache, so they count
+    every row once whichever concurrent write fills the cache."""
+    from metadata_ingestion_poc_spark.framework import run_source
+
+    source, cfg = split_source
+    read = get_reader("csv")(spark, source.options)
+    assert read.rdd.getNumPartitions() >= 4
+    for day in range(5):
+        m = run_source(spark, source, cfg, ingest_date=f"2026-02-0{day + 1}")
+        assert m == {
+            "rows_ingested": 12, "null_key_rows": 4, "rows_quarantined": 4,
+        }, f"run {day}"
+    hub = read_hub(spark, f"{cfg.hub_base}/d/split")
+    # 8 keyed rows upserted in place; the 4 NULL-key rows of each run
+    # never match an old row, so they accumulate
+    assert hub.count() == 8 + 5 * 4
+
+
+def test_failed_hub_write_waits_for_siblings_and_keeps_old_hub(
+    spark, split_source, monkeypatch
+):
+    from metadata_ingestion_poc_spark import framework
+    from metadata_ingestion_poc_spark.framework import run_source
+
+    source, cfg = split_source
+    run_source(spark, source, cfg, ingest_date="2026-03-01")
+    hub_path = f"{cfg.hub_base}/d/split"
+    before = sorted(map(str, read_hub(spark, hub_path).collect()))
+
+    finished = []
+    real_write_raw = framework.write_raw
+
+    def write_raw(df, path, partitions):
+        real_write_raw(df, path, partitions)
+        finished.append(path)
+
+    def write_hub(*args, **kwargs):
+        raise RuntimeError("hub write failed")
+
+    monkeypatch.setattr(framework, "write_raw", write_raw)
+    monkeypatch.setattr(framework, "write_hub", write_hub)
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="hub write failed"):
+        run_source(spark, source, cfg, ingest_date="2026-03-02")
+    # RAW and quarantine appends had both finished when the error surfaced
+    assert sorted(finished) == sorted(
+        [f"{cfg.raw_base}/d/split", f"{cfg.quarantine_base}/d/split"]
+    )
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == persisted
+    assert sorted(map(str, read_hub(spark, hub_path).collect())) == before
+
+
+def test_parquet_merge_keeps_every_row_of_a_repeated_batch_key(spark, tmp_path):
+    """The merge anti-joins the old rows against the batch keys as they
+    are, duplicates included: a repeated key drops its old row once,
+    every batch row of it lands, and old NULL-key rows never match."""
+    from metadata_ingestion_poc_spark.writer import _write_hub_parquet_merge
+
+    path = str(tmp_path / "hub")
+    schema = "pk BIGINT, v STRING"
+    old = spark.createDataFrame(
+        [(1, "old1"), (2, "old2"), (None, "n1"), (None, "n2")], schema
+    )
+    _write_hub_parquet_merge(spark, old, path, ["pk"])
+    batch = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (1, "y"), (3, "z")], schema
+    )
+    _write_hub_parquet_merge(spark, batch, path, ["pk"])
+    got = sorted(
+        (r.pk if r.pk is not None else -1, r.v)
+        for r in read_hub(spark, path).collect()
+    )
+    assert got == [
+        (-1, "n1"), (-1, "n2"), (1, "x"), (1, "y"), (1, "y"),
+        (2, "old2"), (3, "z"),
+    ]
+
+
+def test_run_source_rejects_zones_sharing_a_directory(spark, tmp_path):
+    from metadata_ingestion_poc_spark.config import Config
+    from metadata_ingestion_poc_spark.framework import run_source
+    from metadata_ingestion_poc_spark.metadata import Source
+
+    src = Source(
+        id="clash", type="csv", domain="d", entity="e",
+        options={"path": str(tmp_path / "absent.csv")},
+        hub_primary_keys=["k"],
+    )
+    lake = tmp_path / "lake"
+    cfg = Config(
+        env="local", raw_base=str(lake), hub_base=f"{tmp_path}/./lake",
+        checkpoint_base="",
+    )
+    with pytest.raises(ValueError, match="RAW and HUB zones resolve"):
+        run_source(spark, src, cfg)
+    cfg = Config(
+        env="local", raw_base=str(lake / "raw"), hub_base=str(lake / "hub"),
+        checkpoint_base="", quarantine_base=str(lake / "hub"),
+    )
+    with pytest.raises(ValueError, match="HUB and quarantine zones"):
+        run_source(spark, src, cfg)
